@@ -1,16 +1,20 @@
-"""Vector math over ``array<float>`` columns.
+"""Vector math over ``array<float>`` columns, built as Spark SQL text.
 
-Two implementations with IDENTICAL floating-point results:
+Each function renders its whole expression as one SQL string for a single
+``F.expr``: a 64-term chain costs one parse on the driver instead of
+several py4j round trips per term.  An operand is a column name or a
+Python sequence of floats (a query vector), spliced in as exact double
+literals (:func:`sql_double`) — one scalar per term of a static chain.
 
-* ``dim=None``: ``zip_with`` + ``aggregate`` — a Catalyst higher-order left
-  fold.  Correct for any length, but higher-order lambdas are *interpreted*
-  per element (no WholeStageCodegen) — fine for one query vector, slow for
-  all-pairs workloads.
-* ``dim=K`` (statically known): an explicit ``a[1]*b[1] + … + a[K]*b[K]``
-  expression chain — plain arithmetic that compiles into WholeStageCodegen,
-  ~1-2 orders of magnitude faster in pairwise joins.  Left-associated
-  addition evaluates in exactly the fold's order (and ``0.0 + p1 == p1`` in
-  IEEE), so both paths and the DuckDB oracle construction
+* ``dim=None``: ``aggregate(zip_with(a, b, …), 0D, (acc, v) -> acc + v)`` —
+  a higher-order left fold.  Correct for any length, but higher-order
+  lambdas are *interpreted* per element (no WholeStageCodegen) — fine for
+  one query vector, slow for all-pairs workloads.
+* ``dim=K`` (statically known): the unrolled ``a[1]*b[1] + … + a[K]*b[K]``
+  — plain arithmetic that compiles into WholeStageCodegen, ~1-2 orders of
+  magnitude faster in pairwise joins.  Left-associated addition evaluates
+  in exactly the fold's order (and ``0.0 + p1 == p1`` in IEEE), so both
+  forms and the DuckDB oracle construction
   ``list_sum(list_transform(range(1,K+1), i -> CAST(a[i] AS DOUBLE) * …))``
   are bitwise-identical.
 
@@ -20,51 +24,65 @@ exact float64 products → reproducible sums to the last ulp.
 
 from __future__ import annotations
 
-from functools import reduce
+from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
+#: a column name, or a vector given as Python floats
+Operand = str | Sequence[float]
 
-def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    """Ordered dot product of two equal-length float arrays (see module
-    docstring for the dim=None vs static-dim trade-off).
 
-    Pass PLAIN COLUMN NAMES (both sides) with a static ``dim`` to build
-    the chain as ONE parsed SQL expression: the Column-by-Column form
-    costs ~6 py4j round trips per term (~2 s of DRIVER time per 64-dim
-    chain, measured — r15 optimization round), the parsed form ~3 ms,
-    and the resulting expressions are bit-identical (verified)."""
-    if dim is not None and isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            " + ".join(
-                f"CAST(element_at(`{a}`, {i}) AS DOUBLE)"
-                f" * CAST(element_at(`{b}`, {i}) AS DOUBLE)"
-                for i in range(1, dim + 1)
-            )
+def sql_double(v: float) -> str:
+    """Exact Spark SQL double literal for ``v``.  ``repr`` is the shortest
+    string that round-trips binary64, and the string-to-double cast parses
+    it back to the same bits — ``nan``, ``inf``, ``-inf`` and ``-0.0``
+    included, which a ``1.5D`` literal cannot spell."""
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
+
+
+def _array(a: Operand) -> str:
+    if isinstance(a, str):
+        return "`" + a.replace("`", "``") + "`"
+    return "array(%s)" % ", ".join(map(sql_double, a))
+
+
+def _elem(a: Operand, i: int) -> str:
+    """Element ``i`` (1-based) of ``a`` as a double."""
+    if isinstance(a, str):
+        return f"CAST(element_at({_array(a)}, {i}) AS DOUBLE)"
+    return sql_double(a[i - 1])
+
+
+def _dot(a: Operand, b: Operand, dim: int | None) -> str:
+    if dim is None:
+        return (
+            f"aggregate(zip_with({_array(a)}, {_array(b)},"
+            " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"
         )
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    if dim is not None:
-        terms = [
-            F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
-            for i in range(1, dim + 1)
-        ]
-        return reduce(lambda acc, t: acc + t, terms)
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
+    return " + ".join(f"{_elem(a, i)} * {_elem(b, i)}" for i in range(1, dim + 1))
 
 
-def l2_norm(a: Column | str, dim: int | None = None) -> Column:
-    return F.sqrt(dot(a, a, dim))
+def _norm(a: Operand, dim: int | None) -> str:
+    return f"sqrt({_dot(a, a, dim)})"
 
 
-def cosine(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
+def dot(a: Operand, b: Operand, dim: int | None = None) -> Column:
+    """Ordered dot product of two equal-length float vectors (see module
+    docstring for the dim=None vs static-dim trade-off)."""
+    return F.expr(_dot(a, b, dim))
+
+
+def l2_norm(a: Operand, dim: int | None = None) -> Column:
+    return F.expr(_norm(a, dim))
+
+
+def cosine(a: Operand, b: Operand, dim: int | None = None) -> Column:
     """Cosine similarity; NULL-safe only as far as the inputs are."""
-    return dot(a, b, dim) / (l2_norm(a, dim) * l2_norm(b, dim))
+    return F.expr(f"({_dot(a, b, dim)}) / ({_norm(a, dim)} * {_norm(b, dim)})")
 
 
-def norm_unit(a: Column, dim: int | None = None) -> Column:
+def norm_unit(a: Operand, dim: int | None = None) -> Column:
     """L2-normalize an array<float> to array<double> (pre-normalizing the
     corpus once turns every cosine into a plain dot at query time — the
     O(n) norms instead of O(n²) trick for pairwise workloads).
@@ -73,24 +91,18 @@ def norm_unit(a: Column, dim: int | None = None) -> Column:
     against the elements: the earlier ``transform(a, x -> x / n)`` form
     captured the whole norm chain inside the lambda, and higher-order
     lambdas are interpreted per element — the 64-term chain re-evaluated
-    64× per row measured ~10× slower on a corpus normalize.  Same doubles
-    bit for bit (one shared n, same ``x.cast(double)/n`` division); rows
-    are fixed-``dim`` by contract when ``dim`` is static.
+    64× per row measured ~10× slower on a corpus normalize.  Rows are
+    fixed-``dim`` by contract when ``dim`` is static."""
+    reps = dim if dim is not None else f"size({_array(a)})"
+    return F.expr(
+        f"zip_with({_array(a)}, array_repeat({_norm(a, dim)}, {reps}),"
+        " (x, nn) -> CAST(x AS DOUBLE) / nn)"
+    )
 
-    Pass a PLAIN COLUMN NAME with static ``dim`` to build the whole thing
-    as one parsed SQL expression (the :func:`dot` py4j-cost note; the two
-    forms are bit-identical, verified)."""
-    if dim is not None and isinstance(a, str):
-        n_sql = "sqrt(%s)" % " + ".join(
-            f"CAST(element_at(`{a}`, {i}) AS DOUBLE)"
-            f" * CAST(element_at(`{a}`, {i}) AS DOUBLE)"
-            for i in range(1, dim + 1)
-        )
-        return F.expr(
-            f"zip_with(`{a}`, array_repeat({n_sql}, {dim}),"
-            " (x, nn) -> CAST(x AS DOUBLE) / nn)"
-        )
-    a = F.col(a) if isinstance(a, str) else a
-    n = l2_norm(a, dim)
-    reps = F.lit(dim) if dim is not None else F.size(a)
-    return F.zip_with(a, F.array_repeat(n, reps), lambda x, nn: x.cast("double") / nn)
+
+def sq_dist(a: Operand, b: Operand, dim: int) -> Column:
+    """Ordered-chain squared L2 distance of two ``dim``-element vectors —
+    (x-y) is computed once per term and squared by multiplication (sub,
+    sub, mul: no a*b-c*d shape, so neither engine can FMA-contract)."""
+    diffs = (f"({_elem(a, i)} - {_elem(b, i)})" for i in range(1, dim + 1))
+    return F.expr(" + ".join(f"{d} * {d}" for d in diffs))

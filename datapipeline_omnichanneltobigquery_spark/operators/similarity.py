@@ -6,10 +6,11 @@ shuffle until the final TakeOrderedAndProject (k rows per partition → driver
 merge).  That is already the right 100 TB plan for one-off queries.
 
 All-pairs workloads pre-normalize the corpus once (O(n) norms) so each pair
-costs a single dot product, and the dot product itself is an unrolled
-WholeStageCodegen expression when the dimension is statically known
-(functions/vectors.py) — the difference between interpreted higher-order
-lambdas and codegen is ~50× on a 2k×2k pair join.
+costs a single dot product.  Every vector expression comes from
+functions/vectors.py as one parsed SQL string over column names or query
+literals; with a static dimension it is an unrolled WholeStageCodegen chain
+— the difference between interpreted higher-order lambdas and codegen is
+~50× on a 2k×2k pair join.
 
 The scale path for repeated queries is IVF: partition the corpus once by
 nearest centroid (one shuffle, persisted/bucketed by cluster id), then probe
@@ -25,7 +26,14 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from datapipeline_omnichanneltobigquery_spark.functions.vectors import cosine, dot, norm_unit
+from datapipeline_omnichanneltobigquery_spark.functions.vectors import (
+    cosine,
+    dot,
+    l2_norm,
+    norm_unit,
+    sq_dist,
+    sql_double,
+)
 
 
 def _query_vec_df(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
@@ -61,7 +69,7 @@ def cosine_topk(
     return (
         embeddings.crossJoin(F.broadcast(q))
         .filter(F.col(id_col) != query_vec_id)
-        .select(id_col, cosine(F.col(vec_col), F.col("__qv"), dim).alias("cos_sim"))
+        .select(id_col, cosine(vec_col, "__qv", dim).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col(id_col))
         .limit(k)
     )
@@ -255,6 +263,7 @@ def kmeans_refine(
     """
     if dim is None:
         raise ValueError("kmeans_refine needs the static dimension")
+    mean_sql = "array(%s)" % ", ".join(f"avg(element_at(__u, {i}))" for i in range(1, dim + 1))
     cent = centroids
     for _ in range(n_iters):
         scored = unit.crossJoin(F.broadcast(cent)).select(
@@ -263,18 +272,13 @@ def kmeans_refine(
         assign = scored.groupBy(id_col).agg(
             F.max_by("cid", F.struct(F.col("sim"), (-F.col("cid")).alias("tb"))).alias("cid")
         )
-        means = (
-            unit.join(assign, id_col)
-            .groupBy("cid")
-            .agg(*[F.avg(F.element_at("__u", i)).alias(f"m_{i}") for i in range(1, dim + 1)])
-        )
-        mean_arr = F.array(*[F.col(f"m_{i}") for i in range(1, dim + 1)])
+        means = unit.join(assign, id_col).groupBy("cid").agg(F.expr(mean_sql).alias("__m"))
         # one-shot localCheckpoint, not .cache(): the next iteration (and the
         # caller) re-reads this tiny table from the checkpoint, and the RDD is
         # dropped by the ContextCleaner when the reference dies — a .cache()
         # here leaked one centroid table per iteration for the session
         # lifetime (same fix as minhash_candidate_pairs, dedup.py).
-        cent = means.select("cid", norm_unit(mean_arr, dim).alias("cv")).localCheckpoint()
+        cent = means.select("cid", norm_unit("__m", dim).alias("cv")).localCheckpoint()
     return cent
 
 
@@ -548,10 +552,9 @@ def ivf_topk_from_index(
     nrm = math.sqrt(sum(v * v for v in query_vec)) or 1.0
     q = [v / nrm for v in query_vec]
     cent = spark.read.parquet(f"{path}/centroids")
-    qcol = F.array(*[F.lit(float(v)) for v in q])
     probe = [
         r.cid
-        for r in cent.select("cid", dot(qcol, F.col("cv"), dim).alias("sim"))
+        for r in cent.select("cid", dot(q, "cv", dim).alias("sim"))
         .orderBy(F.col("sim").desc(), F.col("cid"))
         .limit(n_probe)
         .collect()
@@ -560,7 +563,7 @@ def ivf_topk_from_index(
     if exclude_id is not None:
         postings = postings.filter(F.col(id_col) != exclude_id)
     return (
-        postings.select(id_col, dot(qcol, F.col("__u"), dim).alias("cos_sim"))
+        postings.select(id_col, dot(q, "__u", dim).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col(id_col))
         .limit(k)
     )
@@ -871,7 +874,7 @@ def srp_keys(
     # exact (and -0.0 vs +0.0 can only differ when every term is -0.0,
     # where the >= 0 sign test agrees anyway).
     planes_lit = "array(" + ", ".join(
-        "array(" + ", ".join(f"{c!r}D" for c in p) + ")" for p in planes
+        "array(" + ", ".join(map(sql_double, p)) + ")" for p in planes
     ) + ")"
     bits_sql = (
         f"transform({planes_lit}, p -> CASE WHEN aggregate("
@@ -962,17 +965,15 @@ def srp_near_dup_pairs(
     # columns the condition carries ONE dot chain and compiles.  Values
     # are bit-identical: sqrt(dot(x,x)) is the same double wherever it is
     # evaluated, so the oracle twin needs no change.
-    from datapipeline_omnichanneltobigquery_spark.functions.vectors import dot, l2_norm
-
     va = embeddings.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("__va"),
-        l2_norm(F.col(vec_col), dim).alias("__na"),
+        l2_norm(vec_col, dim).alias("__na"),
     )
     vb = embeddings.select(
         F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("__vb"),
-        l2_norm(F.col(vec_col), dim).alias("__nb"),
+        l2_norm(vec_col, dim).alias("__nb"),
     )
     return (
         cand.join(va, "id_a")
@@ -1257,23 +1258,8 @@ def _sub_explode(m_sub: int, sd: int, vec: Column) -> Column:
     )
 
 
-def _d2(a: Column, b: Column, sd: int) -> Column:
-    """Ordered-fold squared L2 distance of two ``sd``-dim double arrays —
-    (x-y) is computed once per term and squared by multiplication (sub,
-    sub, mul: no a*b-c*d shape, so neither engine can FMA-contract)."""
-    terms = [
-        (F.element_at(a, i) - F.element_at(b, i))
-        * (F.element_at(a, i) - F.element_at(b, i))
-        for i in range(1, sd + 1)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
 def _d2_sql(a: str, b: str, sd: int) -> str:
-    """DuckDB twin of :func:`_d2` (same left-to-right term order)."""
+    """DuckDB twin of :func:`vectors.sq_dist` (same left-to-right term order)."""
     return (
         f"list_sum(list_transform(range(1, {sd + 1}), "
         f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
@@ -1348,7 +1334,7 @@ def pq_topk_join(
             F.col(id_col),
             "m",
             "j",
-            _d2(F.col("sv"), F.col("cv"), sd).alias("d2"),
+            sq_dist("sv", "cv", sd).alias("d2"),
         )
         .groupBy(id_col, "m")
         .agg(F.min_by("j", F.struct(F.col("d2"), F.col("j"))).alias("code"))
@@ -1446,12 +1432,6 @@ def pq_topk_join_sql(
 # ---------------------------------------------------------------------------
 # IVF × PQ — the composed memory-bounded partition-pruned ANN index
 # ---------------------------------------------------------------------------
-
-
-def _lit_vec(values) -> Column:
-    """array<double> literal from a collected vector (exact: binary64
-    round-trips py4j unchanged)."""
-    return F.array(*[F.lit(float(v)) for v in values])
 
 
 def _pq_index_batches_fn(cent_ids, cent_mat, js, cb_mats, sd, id_name):
@@ -1722,9 +1702,6 @@ def ivf_pq_topk_join_from_index(
             s = s + a[i] * b[i]
         return s
 
-    def _sql_d(v: float) -> str:
-        return f"CAST('{v!r}' AS DOUBLE)"  # repr round-trips binary64 exactly
-
     qid_type = qu_plan.schema["query_id"].dataType.simpleString()
     entries = []
     for qr in qrows:
@@ -1733,25 +1710,28 @@ def ivf_pq_topk_join_from_index(
             sub = list(qr["__qu"])[(mm - 1) * sd : mm * sd]
             lut_m.append(
                 "array(%s)"
-                % ", ".join(_sql_d(_py_dot(sub, cv)) for _j, cv in sorted(by_m[mm]))
+                % ", ".join(sql_double(_py_dot(sub, cv)) for _j, cv in sorted(by_m[mm]))
             )
         entries.append(
             f"CAST('{qr['query_id']}' AS {qid_type}), array(%s)" % ", ".join(lut_m)
         )
-    lut_map = F.expr("map(%s)" % ", ".join(entries))
+    lut_sql = "element_at(map(%s), query_id)" % ", ".join(entries)
+    adc_sql = "0D" + "".join(
+        f" + element_at(element_at(__lut, {mm}), element_at(codes, {mm}))"
+        for mm in range(1, m_sub + 1)
+    )
     codes = spark.read.parquet(f"{path}/codes")
     cand = (
         codes.join(F.broadcast(probes), "cluster")
         .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "codes")
-    )
-    adc_sum = F.lit(0.0)
-    for mm in range(1, m_sub + 1):
-        adc_sum = adc_sum + F.element_at(
-            F.element_at(F.element_at(lut_map, F.col("query_id")), mm),
-            F.element_at(F.col("codes"), mm),
+        .select(
+            "query_id",
+            F.col(id_col).alias("neighbor_id"),
+            "codes",
+            F.expr(lut_sql).alias("__lut"),
         )
-    adc = cand.select("query_id", "neighbor_id", F.round(adc_sum, 6).alias("adc_sim"))
+    )
+    adc = cand.select("query_id", "neighbor_id", F.expr(f"round({adc_sql}, 6)").alias("adc_sim"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_sim").desc(), F.col("neighbor_id")
     )

@@ -21,6 +21,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
+HALF_RAM = f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2**21}m"
 
 
 # Spark's RocksDB-backed streaming state store: state lives off-heap in a
@@ -73,7 +74,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local mode = driver-only JVM; this is the one memory knob.  Applied
         # only when this call actually launches the JVM (no-op afterwards).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        # Default: half of physical RAM (64g on a 128 GB host).
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", HALF_RAM))
     )
     if rocksdb_state_store:
         builder = builder.config(

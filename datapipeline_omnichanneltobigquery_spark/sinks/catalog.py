@@ -84,12 +84,8 @@ def upsert_into_table(
     staging = spark.table(staging_table)
     main = spark.table(main_table)
     merged = upsert(main, staging, key=key, broadcast_staging=broadcast_staging)
-    # Materialize before swapping out the table the plan reads from.
-    merged.cache()
-    merged.count()
     merged.write.mode("overwrite").format("parquet").saveAsTable(f"{main_table}__merged")
     swap_table(spark, main_table, f"{main_table}__merged")
-    merged.unpersist()
     drop_table(spark, staging_table)
     return row_count(spark, main_table)
 

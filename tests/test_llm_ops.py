@@ -5,8 +5,10 @@ plumbing faithfulness."""
 from __future__ import annotations
 
 import hashlib
+import struct
 
 import pyspark.sql.functions as F
+import pytest
 
 from datapipeline_omnichanneltobigquery_spark.operators import multimodal as mm
 from datapipeline_omnichanneltobigquery_spark.operators.dedup import (
@@ -197,7 +199,7 @@ def test_kmeans_refine_improves_objective(spark):
 
     def objective(cent):
         scored = unit.crossJoin(F.broadcast(cent)).select(
-            "vec_id", dot(F.col("__u"), F.col("cv"), 64).alias("sim")
+            "vec_id", dot("__u", "cv", 64).alias("sim")
         )
         best = scored.groupBy("vec_id").agg(F.max("sim").alias("best"))
         return best.agg(F.avg("best")).collect()[0][0]
@@ -458,10 +460,12 @@ def test_unigram_logprob_ranks_common_above_rare(spark):
     assert got[100] > got[200]
 
 
-def test_ivf_persisted_index_prunes_partitions(spark, tmp_path):
+@pytest.mark.parametrize("dim", [None, 64])
+def test_ivf_persisted_index_prunes_partitions(spark, tmp_path, dim):
     """The persisted IVF index answers probes by opening only the probed
-    cluster directories (PartitionFilters), and agrees with the in-memory
-    ivf_topk on the same deterministic index."""
+    cluster directories (PartitionFilters), agrees with the in-memory
+    ivf_topk on the same deterministic index, and the static-``dim`` chain
+    returns the same rows bit for bit as the ``dim=None`` fold."""
     from datapipeline_omnichanneltobigquery_spark.operators.similarity import (
         build_ivf_index,
         ivf_topk,
@@ -471,15 +475,33 @@ def test_ivf_persisted_index_prunes_partitions(spark, tmp_path):
 
     emb = read_table(spark, SF_DIR_MID, "embeddings")
     path = str(tmp_path / "ivf")
-    build_ivf_index(emb, path, n_centroids=16)
+    build_ivf_index(emb, path, n_centroids=16, dim=dim)
 
     qvec = [float(v) for v in emb.filter(F.col("vec_id") == 0).first().embedding]
-    got = ivf_topk_from_index(spark, path, qvec, k=11, n_probe=4)
+    got = ivf_topk_from_index(spark, path, qvec, k=11, n_probe=4, dim=dim)
     plan = plan_string(got)
     assert "PartitionFilters" in plan and "cluster" in plan, plan
-    ids_from_index = [r.vec_id for r in got.collect() if r.vec_id != 0][:10]
-    ids_in_memory = [r.vec_id for r in ivf_topk(emb, 0, 10, n_centroids=16, n_probe=4).collect()]
-    assert ids_from_index == ids_in_memory
+    rows = got.collect()
+    ids_from_index = [r.vec_id for r in rows if r.vec_id != 0][:10]
+    in_memory = ivf_topk(emb, 0, 10, n_centroids=16, n_probe=4, dim=dim)
+    assert ids_from_index == [r.vec_id for r in in_memory.collect()]
+
+    def bits(rs):
+        return [(r.vec_id, struct.pack("<d", r.cos_sim)) for r in rs]
+
+    fold = ivf_topk_from_index(spark, path, qvec, k=11, n_probe=4, dim=None).collect()
+    assert bits(rows) == bits(fold)
+
+
+@pytest.mark.parametrize("v", [0.1 + 0.2, -0.0, float("nan"), float("inf"), float("-inf")])
+def test_sql_double_round_trips_exactly(spark, v):
+    """The one float-to-SQL renderer every vector expression uses gives back
+    the same binary64 bits — 17-significant-digit values, the sign of
+    zero, NaN and the infinities included."""
+    from datapipeline_omnichanneltobigquery_spark.functions.vectors import sql_double
+
+    got = spark.sql(f"SELECT {sql_double(v)} AS v").first().v
+    assert struct.pack("<d", got) == struct.pack("<d", v)
 
 
 def test_gated_ann_probes_persisted_index(spark):
